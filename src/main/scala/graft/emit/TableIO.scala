@@ -144,16 +144,19 @@ object TableIO {
       // ONE pipeline compute per commit: the write materializes the cache,
       // the lineage-count pass below reads it back instead of recomputing
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    slice.write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(partCol)
-      .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", maxRecords)
-      .parquet(dataDir(table).toString)
-    val counts = slice.groupBy(partCol).count().collect()
-      .map(r => r.get(0).toString -> r.getLong(1)).toMap
-    val lineage = metricsFn(slice)
-    slice.unpersist(blocking = false)
+    // finally: a failed write, count or metricsFn must not leave the month
+    // cached for the life of the JVM (Materialize.run skips and continues)
+    val (counts, lineage) = try {
+      slice.write
+        .mode(SaveMode.Overwrite)
+        .partitionBy(partCol)
+        .option("partitionOverwriteMode", "dynamic")
+        .option("maxRecordsPerFile", maxRecords)
+        .parquet(dataDir(table).toString)
+      val counts = slice.groupBy(partCol).count().collect()
+        .map(r => r.get(0).toString -> r.getLong(1)).toMap
+      (counts, metricsFn(slice))
+    } finally slice.unpersist(blocking = false)
     // dynamic overwrite leaves untouched any requested partition that had no
     // rows this time — drop its stale directory so snapshot and data agree
     for (k <- keys if counts.getOrElse(k, 0L) == 0L) {

@@ -148,7 +148,7 @@ object Emit {
 
   // ---- storeTopic (outputRdf.py:564-612) -----------------------------------
   def topicTriples(t: KTopic, self: TopicInfo, topics: Map[Long, TopicInfo],
-      article: Option[EnrichedArticle]): Seq[Triple] = {
+      article: Option[ArticleRef]): Seq[Triple] = {
     val d = t.date
     val out = Seq.newBuilder[Triple]
     val uri = self.uri

@@ -1,7 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, collect_set, sort_array}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{array, broadcast, coalesce, col, collect_set,
+  explode, sort_array, substring_index}
 
 /** Enriched article after the dictionary joins J1-J7 (SURVEY.md §2.4):
   * Wikidata P31 classes + labels, parent locations, OSM elements (via
@@ -38,6 +39,33 @@ case class EnrichedArticle(
     microDtstart: Option[String],
     microDtend: Option[String],
     childUrls: Seq[String])
+
+/** The narrow view of an enriched article that the day side reads: the
+  * fields event/topic emission and the child-mention join consume (URI,
+  * location linking, event-type classes, the topic timespan inputs and the
+  * resolved children). Taken from the enriched Dataset by selecting these
+  * columns, so the wide record never crosses an encoder on that side.
+  */
+case class ArticleRef(
+    url: String,
+    wdUri: Option[String],
+    locationFlag: Boolean,
+    parentLocUris: Seq[String],
+    classes: Seq[ClassLabel],
+    microDtstart: Option[String],
+    microDtend: Option[String],
+    dateRows: Seq[IbDateRow],
+    timeRows: Seq[IbTimeRow],
+    childUrls: Seq[String])
+
+object ArticleRef {
+  /** The projection's column names, in field order. */
+  lazy val columns: Seq[String] = Encoders.product[ArticleRef].schema.fieldNames.toSeq
+
+  def of(a: EnrichedArticle): ArticleRef =
+    ArticleRef(a.url, a.wdUri, a.locationFlag, a.parentLocUris, a.classes,
+      a.microDtstart, a.microDtend, a.dateRows, a.timeRows, a.childUrls)
+}
 
 /** Per-row (narrow) enrichment output: everything computable without the
   * wd dictionary, plus the join keys the dictionary joins consume.
@@ -222,9 +250,14 @@ object Enrich {
     * one-hop join's gate) and falls back to a plain shuffle join beyond it —
     * PipelineSpec forces both paths and asserts identical triples.
     *
-    * Plan shape: one BroadcastHashJoin fills every wd-keyed field; the child
-    * resolution is explode → two broadcast joins → one hash aggregation
-    * keyed by article url, joined back (the only shuffles on this side).
+    * Plan shape: `pre` is the only typed stage (ArticleRaw → PreEnriched).
+    * Everything after it is columns: one hash join on the wd key fills
+    * classes / parent locations / OSM elements; the child resolution is
+    * explode → two joins → one `collect_set` aggregation keyed by article
+    * url (the only shuffles on this side), joined back by url. Unmatched
+    * rows get empty arrays via `coalesce`, and the result is typed
+    * `.as[EnrichedArticle]` once, which adds no object operator: no
+    * generated code deserializes or re-packs the wide record here.
     *
     * Returns the enriched Dataset plus the stage caches it holds (`pre` —
     * the parsed+pre-enriched articles feed THREE consumers: the wd join, the
@@ -248,37 +281,38 @@ object Enrich {
     def gate[T](ds: Dataset[T]): Dataset[T] =
       if (p.articles <= bcastMax) broadcast(ds) else ds
 
-    // J1/J2/J3/J4/J6 in one hash join on the wd key
-    val bundles = gate(Dicts.wdBundles(spark, p))
-    val withWd = pre.joinWith(bundles, pre("wdBare") === bundles("wd"), "left_outer")
-    val assembled = withWd.map { case (pr, b) =>
-      if (b == null) assemble(pr, Nil, Nil, Nil, Nil)
-      else assemble(pr, b.classes, b.parent_loc_uris, b.osm_elements, Nil)
-    }
-
     // J5 falcon entity → wp url (inner join = the negative cache), then the
-    // location-flag membership join (flag must be true for falcon children)
+    // location-flag membership join (flag must be true for falcon children);
+    // substring_index(_, "/", -1) is bareWd
     val flags = gate(Dicts.artFlagsDs(spark, p)).toDF()
     val w2w = gate(Dicts.wd2wpDs(spark, p)).toDF()
-    val falconKids = pre.flatMap(r => r.falconEntityUris.map(e => (r.url, bareWd(e))))
-      .toDF("url", "cwd")
-      .join(w2w, col("cwd") === col("wd_id"))
+    val falconKids = pre.select(col("url"), explode(col("falconEntityUris")).as("e"))
+      .join(w2w, substring_index(col("e"), "/", -1) === col("wd_id"))
       .select(col("url"), col("wp_url").as("child"))
       .join(flags, col("child") === col("art_url") && col("loc_flag"))
       .select("url", "child")
     // loc-row link children: existence is enough (any flag)
-    val linkKids = pre.flatMap(r => r.linkCandidates.map(c => (r.url, c)))
-      .toDF("url", "child")
+    val linkKids = pre.select(col("url"), explode(col("linkCandidates")).as("child"))
       .join(flags, col("child") === col("art_url"))
       .select("url", "child")
     val kids = falconKids.unionByName(linkKids)
       .groupBy(col("url"))
-      .agg(sort_array(collect_set(col("child"))).as("children")) // = distinct.sorted
-      .select(col("url").as("_1"), col("children").as("_2"))
-      .as[(String, Seq[String])]
+      .agg(sort_array(collect_set(col("child"))).as("childUrls")) // = distinct.sorted
 
-    val out = assembled.joinWith(kids, assembled("url") === kids("_1"), "left_outer")
-      .map { case (e, k) => if (k == null) e else e.copy(childUrls = k._2) }
+    // J1/J2/J3/J4/J6 in one hash join on the wd key, then the children
+    val joined = pre.join(gate(Dicts.wdBundles(spark, p)), col("wdBare") === col("wd"), "left_outer")
+      .join(kids, Seq("url"), "left_outer")
+    val filled = Map(
+      "classes" -> "classes",
+      "parentLocUris" -> "parent_loc_uris",
+      "osmElements" -> "osm_elements",
+      "childUrls" -> "childUrls")
+    val out = joined.select(Encoders.product[EnrichedArticle].schema.fieldNames.toSeq.map { f =>
+      filled.get(f) match {
+        case Some(c) => coalesce(col(c), array().cast(joined.schema(c).dataType)).as(f)
+        case None => col(f)
+      }
+    }: _*).as[EnrichedArticle]
     (out, Seq(pre))
   }
 

@@ -25,21 +25,33 @@ object Materialize {
     */
   def lineageMetrics(slice: org.apache.spark.sql.DataFrame,
       errorsByDate: org.apache.spark.sql.DataFrame): Map[String, Map[String, Long]] = {
-    def nsCount(prefix: String) =
-      countDistinct(when(col("subj").startsWith(prefix), col("subj")))
-    val counters = slice.groupBy(col("event_date")).agg(
-      count(lit(1)).as("n_triples"),
-      countDistinct(col("subj")).as("n_subjects"),
-      sum(when(col("obj_is_iri"), 1L).otherwise(0L)).as("n_iri_objects"),
-      sum(when(col("graph_module") === "base", 1L).otherwise(0L)).as("n_base"),
-      sum(when(col("graph_module") === "raw", 1L).otherwise(0L)).as("n_raw"),
-      sum(when(col("graph_module") === "osm", 1L).otherwise(0L)).as("n_osm"),
-      sum(when(col("graph_module") === "ohg", 1L).otherwise(0L)).as("n_ohg"),
-      nsCount(Ns.events).as("n_events"),
-      (nsCount(Ns.textTopics) + nsCount(Ns.articleTopics)).as("n_topics"),
-      nsCount(Ns.wikipediaArticle).as("n_articles"),
-      nsCount(Ns.osmElement).as("n_osm_elements"),
-      nsCount(Ns.sentences).as("n_sentences"))
+    // exact two-level aggregate instead of countDistinct (which plans as a
+    // 7-way Expand): per (date, subj) first, so at the second level each
+    // subject is one row and count(subj) is its distinct count — count
+    // skips null subjects exactly as countDistinct does
+    def flag(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
+    def nsCount(prefix: String) = count(when(col("subj").startsWith(prefix), col("subj")))
+    val counters = slice
+      .groupBy(col("event_date"), col("subj")).agg(
+        count(lit(1)).as("n"),
+        flag(col("obj_is_iri")).as("iri"),
+        flag(col("graph_module") === "base").as("base"),
+        flag(col("graph_module") === "raw").as("raw"),
+        flag(col("graph_module") === "osm").as("osm"),
+        flag(col("graph_module") === "ohg").as("ohg"))
+      .groupBy(col("event_date")).agg(
+        sum(col("n")).as("n_triples"),
+        count(col("subj")).as("n_subjects"),
+        sum(col("iri")).as("n_iri_objects"),
+        sum(col("base")).as("n_base"),
+        sum(col("raw")).as("n_raw"),
+        sum(col("osm")).as("n_osm"),
+        sum(col("ohg")).as("n_ohg"),
+        nsCount(Ns.events).as("n_events"),
+        (nsCount(Ns.textTopics) + nsCount(Ns.articleTopics)).as("n_topics"),
+        nsCount(Ns.wikipediaArticle).as("n_articles"),
+        nsCount(Ns.osmElement).as("n_osm_elements"),
+        nsCount(Ns.sentences).as("n_sentences"))
     counters.join(errorsByDate, Seq("event_date"), "left")
       .na.fill(0L)
       .collect()

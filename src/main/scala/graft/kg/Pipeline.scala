@@ -8,25 +8,33 @@ import org.apache.spark.storage.StorageLevel
   *
   *   docs(day pages)    —mapPartitions P1-P9→  ParsedDay(events, topics)
   *   docs(article pages)—mapPartitions P10-16→ ArticleRaw —dedup urls→
-  *                      —broadcast dict joins J1-J7→ EnrichedArticle
-  *   per-doc article refs ⋈ articles —group by doc→ per-doc article map
-  *   ParsedDay ⋈ doc-article map —one flatMap→ event+topic triples
-  *                               —one flatMap→ article mentions (url, date)
-  *   mentions ⋈ articles —flatMap→ article/place/osm triples (+ child mentions)
+  *                      —map→ PreEnriched —column joins J1-J7→ articles
+  *   articles —select columns→ ArticleRef (the narrow day-side view)
+  *   ParsedDay —explode(array_distinct(hrefs))→ (doc, href) ⋈ ArticleRef
+  *             —groupBy doc, sort_array(collect_list)→ per-doc ref list
+  *   ParsedDay ⟕ per-doc refs —one flatMap→ event+topic triples
+  *   ParsedDay —explode events/topics→ depth-1 mentions (url, date)
+  *   mentions ⋈ ArticleRef columns → child mentions (depth 2)
+  *   mentions ⋈ articles —flatMap→ article/place/osm triples
   *   mentions ⋈ one-hop dictionary → ohg triples
   *   union → distinct → partitioned by (event_date, graph_module)
   *
-  * The whole day-page side costs three exchanges (ref distinct+group, the
-  * article join, the group-back by doc_id); the mention side three more
-  * (mention distinct, mention⋈articles, final distinct). Everything else is
-  * narrow mapPartitions work. Dictionaries broadcast; the one-hop join is the
+  * Object boundaries: the full EnrichedArticle is deserialized in exactly
+  * one place, the (Mention, EnrichedArticle) flatMap that calls
+  * Emit.articleTriples. The enrich assembly, the per-doc resolution, the
+  * mentions, the ohg join and the parse-error lineage are column
+  * expressions; the day-triple flatMap deserializes ParsedDay plus ArticleRef.
+  *
+  * The day-page side shuffles for the href⋈refs join, the group-back by
+  * doc_id and the doc join; the mention side for the child join, the
+  * mention distinct, mention⋈articles and the final distinct. Everything
+  * else is narrow work. Dictionaries broadcast; the one-hop join is the
   * Zipf-skew hotspot and is AQE/salting-eligible (graft.plans.SaltedJoin is
   * the shuffle-side fallback when the dictionary outgrows broadcast).
   */
 object Pipeline {
 
   case class ParsedDay(doc_id: String, events: Seq[KEvent], topics: Seq[KTopic])
-  case class DocArts(doc_id: String, arts: Seq[(String, EnrichedArticle)])
   case class Mention(url: String, date: String, isTopic: Boolean,
       forcePlace: Boolean, traverseChildren: Boolean)
 
@@ -86,15 +94,8 @@ object Pipeline {
     Enrich.enrichJoinedTracked(articlesRaw, p)(spark)
   }
 
-  /** All article hrefs a doc needs resolved: event sentence links (phrase
-    * articles) and topic row links (topic articles).
-    */
-  def docHrefs(pd: ParsedDay): Seq[String] =
-    (pd.events.flatMap(_.sentences.flatMap(_.links).map(_.href)) ++
-      pd.topics.flatMap(_.linkHref)).distinct
-
   /** In-row emission for one day doc with its resolved articles. */
-  def emitDoc(pd: ParsedDay, arts: Map[String, EnrichedArticle]): Seq[Triple] = {
+  def emitDoc(pd: ParsedDay, arts: Map[String, ArticleRef]): Seq[Triple] = {
     val infos: Map[Long, Emit.TopicInfo] = pd.topics.map { t =>
       val art = t.linkHref.flatMap(arts.get)
       val uri = art.map(a => Uris.articleTopicUri(a.url)).getOrElse(Uris.textTopicUri(t.text))
@@ -109,18 +110,6 @@ object Pipeline {
         val info = infos(t.topicId)
         Emit.topicTriples(t, info, infos, t.linkHref.flatMap(arts.get))
       }
-  }
-
-  /** Depth-1 article mentions of one doc. */
-  def docMentions(pd: ParsedDay, arts: Map[String, EnrichedArticle]): Seq[Mention] = {
-    val ev = pd.events.flatMap(e =>
-      e.sentences.flatMap(_.links).map(_.href).distinct.flatMap(h =>
-        arts.get(h).map(a => Mention(a.url, e.date, isTopic = false,
-          forcePlace = false, traverseChildren = true))))
-    val top = pd.topics.flatMap(t =>
-      t.linkHref.flatMap(arts.get).map(a => Mention(a.url, t.date, isTopic = true,
-        forcePlace = false, traverseChildren = true)))
-    (ev ++ top).distinct
   }
 
   def triples(spark: SparkSession, sfDir: String,
@@ -174,45 +163,61 @@ object Pipeline {
       onlyDates: Option[Set[String]] = None): Build = {
     import spark.implicits._
 
-    // days feed two consumers (href explode + the doc join) — persist so the
-    // day-page corpus is parsed once, not twice
+    // days feed three consumers (href explode, the doc join, the mention
+    // explode) — persist so the day-page corpus is parsed once
     val days = parsedDays(spark, p, onlyDates)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val (enriched, enrichCaches) = enrichedArticlesTracked(spark, p)
     val articles = enriched.persist(StorageLevel.MEMORY_AND_DISK)
+    // the day side and the child-mention join read only these columns
+    val refCols = ArticleRef.columns.map(col)
+    val refs = articles.select(refCols: _*)
 
-    // per-doc article resolution: one join, grouped back by doc_id
-    val refs = days.flatMap(pd => docHrefs(pd).map(h => (pd.doc_id, h)))
-    val docArts = refs
-      .joinWith(articles, refs("_2") === articles("url"))
-      .groupByKey(_._1._1)
-      .mapGroups((doc, it) => DocArts(doc, it.map(x => (x._1._2, x._2)).toSeq.sortBy(_._1)))
-
-    val docJoined = days
-      .joinWith(docArts, days("doc_id") === docArts("doc_id"), "left_outer")
-      .map { case (pd, da) =>
-        (pd, if (da == null) Seq.empty[(String, EnrichedArticle)] else da.arts)
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // per-doc article resolution: every distinct href a doc needs (event
+    // sentence links + topic links) joined to its ref, gathered back by doc
+    val sentenceHrefs =
+      flatten(flatten(col("events.sentences")).getField("links")).getField("href")
+    val docArts = days
+      .select(col("doc_id"),
+        explode(array_distinct(concat(sentenceHrefs, array_compact(col("topics.linkHref")))))
+          .as("href"))
+      .join(refs, col("href") === col("url"))
+      .groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(struct(col("href").as("_1"), struct(refCols: _*).as("_2"))))
+        .as("arts"))
+    val withArts = days.join(docArts, Seq("doc_id"), "left_outer")
+    val docJoined = withArts
+      .select(struct(col("doc_id"), col("events"), col("topics")).as("_1"),
+        coalesce(col("arts"), array().cast(withArts.schema("arts").dataType)).as("_2"))
+      .as[(ParsedDay, Seq[(String, ArticleRef)])]
 
     val dayTriples = docJoined.flatMap { case (pd, arts) => emitDoc(pd, arts.toMap) }
 
     // ---- article mentions → article/place/osm triples -----------------------
-    val depth1 = docJoined
-      .flatMap { case (pd, arts) => docMentions(pd, arts.toMap) }
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // depth 1: each event's sentence-link hrefs and each topic's link, at
+    // that row's date. Hrefs that name no article drop out at the inner
+    // joins with the articles below; repeats at the mention distinct.
+    val events = days.select(explode(col("events")).as("e"))
+    val topics = days.select(explode(col("topics")).as("t"))
+    val depth1 = events
+      .select(explode(flatten(col("e.sentences.links")).getField("href")).as("url"),
+        col("e.date").as("date"), lit(false).as("isTopic"))
+      .unionByName(topics.where(col("t.linkHref").isNotNull)
+        .select(col("t.linkHref").as("url"), col("t.date").as("date"), lit(true).as("isTopic")))
+      .select(col("url"), col("date"), col("isTopic"),
+        lit(false).as("forcePlace"), lit(true).as("traverseChildren"))
+      .as[Mention]
+    // depth 2: children of depth-1 place holders
     val childMentions = depth1
-      .joinWith(articles, depth1("url") === articles("url"))
-      .flatMap { case (m, a) =>
-        val hasPlace = a.locationFlag || m.isTopic || m.forcePlace
-        if (hasPlace)
-          a.childUrls.map(c => Mention(c, m.date, isTopic = false,
-            forcePlace = true, traverseChildren = false))
-        else Nil
-      }
+      .join(refs.select("url", "locationFlag", "childUrls"), Seq("url"))
+      .where(col("locationFlag") || col("isTopic") || col("forcePlace"))
+      .select(explode(col("childUrls")).as("url"), col("date"),
+        lit(false).as("isTopic"), lit(true).as("forcePlace"),
+        lit(false).as("traverseChildren"))
+      .as[Mention]
     val mentions = depth1.union(childMentions).distinct()
-    // one join, two consumers (article triples + ohg probe)
+    // one join, three consumers (article triples, ohg probe, error lineage);
+    // articleTriples is the one step that needs the whole enriched record
     val mentArts = mentions
       .joinWith(articles, mentions("url") === articles("url"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -229,29 +234,25 @@ object Pipeline {
     val onehop = spark.range(p.articles)
       .flatMap(i => if (Synth.article(p, i.toInt).wdId.isDefined) Dicts.onehopFor(i.toInt) else Nil)
     val wdMentions = mentArts
-      .flatMap { case (m, a) => a.wdUri.map(w => (w, m.date)) }
+      .select(col("_2.wdUri").as("subj_wd"), col("_1.date").as("event_date"))
+      .where(col("subj_wd").isNotNull)
       .distinct()
     val bcastMaxArticles =
       spark.conf.get("graft.onehop.broadcast.maxArticles", "1000000").toInt
-    val ohgTriples: Dataset[Triple] =
+    val ohgJoined =
       if (p.articles <= bcastMaxArticles)
-        wdMentions
-          .joinWith(broadcast(onehop), wdMentions("_1") === onehop("subj_wd"))
-          .map { case ((_, date), r) =>
-            Triple("ohg", r.subj_wd, r.pred, r.obj, r.obj_is_iri,
-              r.obj_dtype.orNull, r.obj_lang.orNull, date)
-          }
+        wdMentions.join(broadcast(onehop.toDF()), Seq("subj_wd"))
       else {
         val hotThreshold =
           spark.conf.get("graft.onehop.salt.hotThreshold", "10000").toLong
-        graft.plans.SaltedJoin.join(
-            wdMentions.toDF("subj_wd", "event_date"), onehop.toDF(), "subj_wd",
-            hotThreshold = hotThreshold)
-          .select(lit("ohg").as("graph_module"), col("subj_wd").as("subj"),
-            col("pred"), col("obj"), col("obj_is_iri"),
-            col("obj_dtype"), col("obj_lang"), col("event_date"))
-          .as[Triple]
+        graft.plans.SaltedJoin.join(wdMentions, onehop.toDF(), "subj_wd",
+          hotThreshold = hotThreshold)
       }
+    val ohgTriples = ohgJoined
+      .select(lit("ohg").as("graph_module"), col("subj_wd").as("subj"),
+        col("pred"), col("obj"), col("obj_is_iri"),
+        col("obj_dtype"), col("obj_lang"), col("event_date"))
+      .as[Triple]
 
     val out = dayTriples
       .unionByName(articleTriples)
@@ -261,14 +262,14 @@ object Pipeline {
     // lineage: article parse errors attributed to each mention date, one
     // count per (date, article) — reads the mention cache (O5)
     val errorsByDate = mentArts
-      .map { case (m, a) => (m.date, a.url, a.nTimeParseErrors, a.nDateParseErrors) }
+      .select(col("_1.date").as("event_date"), col("_2.url").as("url"),
+        col("_2.nTimeParseErrors").as("time_errs"), col("_2.nDateParseErrors").as("date_errs"))
       .distinct()
-      .toDF("event_date", "url", "time_errs", "date_errs")
       .groupBy(col("event_date"))
       .agg(sum(col("time_errs")).cast("long").as("n_time_parse_errors"),
         sum(col("date_errs")).cast("long").as("n_date_parse_errors"))
 
-    Build(out, Seq(days, articles, docJoined, depth1, mentArts) ++ enrichCaches,
+    Build(out, Seq(days, articles, mentArts) ++ enrichCaches,
       errorsByDate)
   }
 }

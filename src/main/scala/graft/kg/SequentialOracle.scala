@@ -53,7 +53,8 @@ object SequentialOracle {
       }
       for (t <- topics) {
         val info = infos(t.topicId)
-        out ++= Emit.topicTriples(t, info, infos, info.artUrl.map(articles))
+        out ++= Emit.topicTriples(t, info, infos,
+          info.artUrl.map(u => ArticleRef.of(articles(u))))
         info.artUrl.foreach(u => mentions += ((u, t.date, true, false, true)))
       }
     }

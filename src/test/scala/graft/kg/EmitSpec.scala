@@ -167,7 +167,7 @@ class EmitSpec extends AnyFunSuite {
     val t = KTopic("day:2022-01-05", 0L, d, 1, "Storm q", Some(url),
       parentTopicIds = Seq(7L), sourceUrl = "src", raw = "[raw-t]")
     val self = Emit.TopicInfo(0L, topicUri, Some(url), Nil, Seq(7L))
-    val got = Emit.topicTriples(t, self, Map(7L -> parent), Some(mkArticle(url))).toSet
+    val got = Emit.topicTriples(t, self, Map(7L -> parent), Some(ArticleRef.of(mkArticle(url)))).toSet
 
     def iri(s: String, p: String, o: String) = Triple("base", s, p, o, true, null, null, d)
     def str(s: String, p: String, o: String) = Triple("base", s, p, o, false, Ns.xsdString, null, d)
@@ -263,7 +263,7 @@ class EmitSpec extends AnyFunSuite {
     val topicUri = Uris.articleTopicUri(url)
     val self = Emit.TopicInfo(0L, topicUri, Some(url), Nil, Nil)
     val t = KTopic("day:2022-01-05", 0L, d, 1, "Storm q", Some(url), Nil, "src", "[raw-t]")
-    val got = Emit.topicTriples(t, self, Map.empty, Some(a)).toSet
+    val got = Emit.topicTriples(t, self, Map.empty, Some(ArticleRef.of(a))).toSet
       .filter(tr => tr.pred == Ns.COY + "hasTimespan" || tr.subj.startsWith(Ns.timespan))
 
     val ts = Uris.timespanUri(Some("2022-01-05 13:30:00"), Some("2022-01-05 13:30:00"),
@@ -297,7 +297,7 @@ class EmitSpec extends AnyFunSuite {
     val topicUri = Uris.articleTopicUri(url)
     val self = Emit.TopicInfo(0L, topicUri, Some(url), Nil, Nil)
     val t = KTopic("day:2022-01-05", 0L, d, 1, "Storm q", Some(url), Nil, "src", "[raw-t]")
-    val got = Emit.topicTriples(t, self, Map.empty, Some(a)).toSet
+    val got = Emit.topicTriples(t, self, Map.empty, Some(ArticleRef.of(a))).toSet
       .filter(tr => tr.pred == Ns.COY + "hasTimespan" || tr.subj.startsWith(Ns.timespan))
 
     val ts = Uris.timespanUri(Some("2022-01-17 14:29:00+04:00"),
@@ -326,7 +326,7 @@ class EmitSpec extends AnyFunSuite {
     val topicUri = Uris.articleTopicUri(url)
     val self = Emit.TopicInfo(0L, topicUri, Some(url), Nil, Nil)
     val t = KTopic("day:2022-01-05", 0L, d, 1, "Storm q", Some(url), Nil, "src", "[raw-t]")
-    val got = Emit.topicTriples(t, self, Map.empty, Some(a)).toSet
+    val got = Emit.topicTriples(t, self, Map.empty, Some(ArticleRef.of(a))).toSet
       .filter(tr => tr.pred == Ns.COY + "hasTimespan" || tr.subj.startsWith(Ns.timespan))
 
     val ts = Uris.timespanUri(None, None, ongoing = false, Some("13:05:00"), None, None)
