@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kg._
 import graft.canon.ConnectedComponents
+import graft.plans.{Caches, Leaves}
 
 /** KG-construction pipeline facade: deterministic synthetic span corpus →
   * parse → enrich → canonicalize → triples (graft.kg.Pipeline), plus the
@@ -14,76 +15,24 @@ import graft.canon.ConnectedComponents
   */
 object KgPipeline {
 
-  // cache the triple table per (session, sf dir) — queries share one pipeline
-  // run. plans.SessionCache carries the whole lifecycle discipline (session-
-  // reference keys, computeIfAbsent single-build, dead-session purge that is
-  // safe against same-map reentrancy — the edges builder calls triples(), so
-  // a purge-on-every-access scheme violated CHM's "mapping function must not
-  // modify this map" contract; see SessionCache's scaladoc).
-  private val cache = new graft.plans.SessionCache[Dataset[Triple]]("kg-triples")
-  // one shared date-deduped (subj, pred, obj) edge projection: article-derived
-  // triples repeat once per mention date (partition key), so every graph-shaped
-  // query (kg02-kg08) needs the same distinct — run the shuffle ONCE, not per
-  // query. Derived predicates of this cache are unique per (subj, obj).
-  private val edgeCache = new graft.plans.SessionCache[DataFrame]("kg-edges")
-  // kg10/kg12/kg13 all need the enriched-article frame and kg13 needs kg12's
-  // metrics table — cache both per sf dir so the enrichment dataflow runs
-  // once across the three queries instead of three times
-  private val enrichedCache =
-    new graft.plans.SessionCache[Dataset[EnrichedArticle]]("kg-enriched")
-  private val metricsCache = new graft.plans.SessionCache[DataFrame]("kg-metrics")
-  // kg14/m05/m06 all consume the interleaved corpus span-by-span, and the
-  // nested spans-array parquet decode dominates each of them (r4 driver lap:
-  // m05 15.9 s + m06 14.6 s vs ~1 s of actual window/agg work) — decode and
-  // posexplode ONCE per (session, sf) and share the flat projection, exactly
-  // the treatment the triple/edge/enriched caches got in r4
-  private val corpusSpansCache =
-    new graft.plans.SessionCache[DataFrame]("kg-corpus-spans")
-  // kg15 (readout), kg17 (PageRank input) and the kg_cooc oracle dump all
-  // need the entity co-occurrence aggregate, whose prologue is the 5-hop
-  // association chain — build it once per (session, sf)
-  private val coocCache = new graft.plans.SessionCache[DataFrame]("kg-cooc")
+  // Every shared frame below is a plans.Leaves entry per (session, sf dir):
+  // queries share one pipeline run, one edge projection, one enrichment.
 
   def triples(spark: SparkSession, sfDir: String): Dataset[Triple] =
-    cache.get(spark, sfDir)(Pipeline.materializedTriples(spark, sfDir))
+    Leaves.frame("kg-triples", spark, sfDir)(Pipeline.materializedTriples(spark, sfDir))
 
-  /** Enriched articles, cached per sf (one enrichment job for kg10/kg12). */
+  /** Enriched articles, cached per sf: kg10/kg12/kg13 share one enrichment. */
   def enriched(spark: SparkSession, sfDir: String): Dataset[EnrichedArticle] =
-    enrichedCache.get(spark, sfDir) {
+    Leaves.frame("kg-enriched", spark, sfDir) {
       val (e, stageCaches) = Pipeline.enrichedArticlesTracked(spark, Synth.paramsFor(sfDir))
-      try graft.plans.Caches.leaf(e) // eager materialization + leaf plan
+      try Caches.leaf(e) // eager materialization + leaf plan
       finally stageCaches.foreach(_.unpersist(blocking = false))
     }
 
-  /** Drop every per-sf cached block (bench/verify hygiene). Caches.free
-    * unpersists the checkpointed RDD behind each LogicalRDD leaf (a plain
-    * Dataset.unpersist is a no-op there) and deletes reliable-checkpoint
-    * files so repeated build cycles don't grow the checkpoint store.
+  /** Free every shared leaf of every module (bench/verify hygiene): an alias
+    * of [[graft.plans.Leaves.releaseAll]], kept for the driver mains.
     */
-  def release(): Unit = {
-    cache.foreachValue(graft.plans.Caches.free(_)); cache.clear()
-    edgeCache.foreachValue(graft.plans.Caches.free(_)); edgeCache.clear()
-    // exact-path cleanup of every pred-layout dir this JVM wrote (covers
-    // custom graft.edges.predDir values the substring match in Caches.free
-    // would miss; double-deletion of the default dirs is a no-op)
-    predDirsWritten.forEach { p =>
-      try {
-        val path = new org.apache.hadoop.fs.Path(p)
-        path.getFileSystem(new org.apache.hadoop.conf.Configuration())
-          .delete(path, true)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
-    predDirsWritten.clear()
-    enrichedCache.foreachValue(graft.plans.Caches.free(_)); enrichedCache.clear()
-    metricsCache.foreachValue(graft.plans.Caches.free(_)); metricsCache.clear()
-    corpusSpansCache.foreachValue(graft.plans.Caches.free(_)); corpusSpansCache.clear()
-    coocCache.foreachValue(graft.plans.Caches.free(_)); coocCache.clear()
-    // the similarity family's s01/s02 result caches ride on this hook: the
-    // FROZEN driver mains (Bench/Verify) call exactly KgPipeline.release()
-    // and Dedup.release(), so this is where non-kg shared frames must clean
-    // up without touching the hashed harness files
-    graft.queries.Similarity.release()
-  }
+  def release(): Unit = Leaves.releaseAll()
 
   /** The interleaved corpus, exploded to one row per span with its 1-based
     * array position — the shared input of every span-shaped consumer (kg14
@@ -95,8 +44,8 @@ object KgPipeline {
     * (plans.Caches) makes the leaf executor-loss-safe on a real cluster.
     */
   def corpusSpans(spark: SparkSession, sfDir: String): DataFrame =
-    corpusSpansCache.get(spark, sfDir)(
-      graft.plans.Caches.leaf(
+    Leaves.frame("kg-corpus-spans", spark, sfDir)(
+      Caches.leaf(
         kg.CorpusStore.scan(spark, kg.Synth.paramsFor(sfDir))
           .selectExpr("doc_id", "posexplode(spans) AS (j, sp)")
           .selectExpr("doc_id", "CAST(j + 1 AS BIGINT) AS pos",
@@ -112,7 +61,7 @@ object KgPipeline {
     * predicate must extend this list; the KgQueriesSpec sequential-oracle
     * fixtures fail immediately if a needed predicate is missing.
     */
-  private val EdgePreds: Seq[String] = Seq(
+  private[graft] val EdgePreds: Seq[String] = Seq(
     Ns.COY + "hasMentionDate", Ns.COY + "isOccuringDuring",
     Ns.COY + "isIdentifiedBy", Ns.COY + "hasOsmElement",
     Ns.COY + "hasWikidataEventType",
@@ -130,57 +79,53 @@ object KgPipeline {
     pred
   }
 
-  /** Date-deduped edges over the kg-query predicate set, cached per sf.
+  /** Date-deduped (subj, pred, obj) edges over the kg-query predicate set,
+    * cached per sf. Article-derived triples repeat once per mention date
+    * (the partition key), so every graph-shaped query (kg02-kg08) needs the
+    * same distinct: it runs once here. Derived predicates of this cache are
+    * unique per (subj, obj).
     *
-    * Two layouts, selected by conf `graft.edges.layout`:
+    * The projection is written ONCE as parquet partitioned by `pred` and read
+    * back. Consumers' `filter(col("pred") === …)` becomes partition PRUNING
+    * at the scan, so each of kg11's 6 predicate legs reads only its own
+    * partition instead of the full edge set, and the read plan is a leaf.
+    * This is the layout a 100 TB triple store wants (predicate-partitioned
+    * storage prunes I/O at the source and survives executor loss); the
+    * localCheckpoint leaf it replaced measured 2-3.5x slower on every chain
+    * query (BENCH/BASELINE.md §edge-layout).
     *
-    *  - `leaf`: one localCheckpoint/checkpoint leaf
-    *    ([[graft.plans.Caches.leaf]]). Chain queries embed up to 8 copies of
-    *    this frame, and a leaf plan keeps their eager per-transformation
-    *    analysis O(query), not O(copies × lineage) — but every
-    *    per-predicate filter re-scans the WHOLE edge frame (kg11's plan
-    *    scans it 6×).
-    *  - `pred` (default): the projection is written ONCE as parquet partitioned by
-    *    `pred` and read back. Consumers are unchanged — their existing
-    *    `filter(col("pred") === …)` becomes partition PRUNING at the scan,
-    *    so each of kg11's 6 predicate legs reads only its own partition
-    *    instead of the full edge set. This is the layout a 100 TB triple
-    *    store wants (predicate-partitioned storage prunes I/O at the
-    *    source and survives executor loss); measured against `leaf` in
-    *    BENCH/BASELINE.md §edge-layout.
+    * The directory is private to this leaf: its free hook deletes it by
+    * exact path, and it is registered with `FileSystem.deleteOnExit` so a
+    * JVM that never releases does not leave it behind.
     */
-  // every pred-layout directory this JVM wrote, deleted BY EXACT PATH on
-  // release() (r6 ADVICE: the Caches.free substring match silently leaked
-  // dirs under a custom graft.edges.predDir)
-  private val predDirsWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  def edges(spark: SparkSession, sfDir: String): DataFrame =
-    edgeCache.get(spark, sfDir) {
+  def edges(spark: SparkSession, sfDir: String): DataFrame = {
+    // dir is keyed by (sf, session, PROCESS): two live sessions on the same
+    // sf must not overwrite each other's files mid-read, and identity hashes
+    // are reproducible across JVMs (fixed HotSpot PRNG seed), so two
+    // CONCURRENT JVMs on the same sf (the multi-JVM bench workflow) could
+    // resolve to the same dir without the pid component.
+    val dir = new org.apache.hadoop.fs.Path(spark.conf.get("graft.edges.predDir",
+      sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-edge-cache") +
+      "/" + java.lang.Integer.toHexString(sfDir.hashCode) +
+      "-" + java.lang.Integer.toHexString(System.identityHashCode(spark)) +
+      "-p" + ProcessHandle.current().pid())
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Leaves.leaf("kg-edges", spark, sfDir) {
       val base = triples(spark, sfDir)
         .filter(col("pred").isin(EdgePreds: _*))
         .select(col("subj"), col("pred"), col("obj")).distinct()
-      if (spark.conf.get("graft.edges.layout", "pred") == "pred") {
-        // dir is keyed by (sf, session, PROCESS): two live sessions on the
-        // same sf must not overwrite each other's files mid-read, and —
-        // r6 ADVICE (medium) — identity hashes are reproducible across JVMs
-        // (fixed HotSpot PRNG seed), so two CONCURRENT JVMs on the same sf
-        // (the multi-JVM bench workflow) could resolve to the same dir and
-        // overwrite each other's parquet files mid-read without the pid
-        // component. Caches.free / release() delete the directory.
-        val dir = spark.conf.get("graft.edges.predDir",
-          sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-edge-cache") +
-          "/" + java.lang.Integer.toHexString(sfDir.hashCode) +
-          "-" + java.lang.Integer.toHexString(System.identityHashCode(spark)) +
-          "-p" + ProcessHandle.current().pid()
-        base.write.mode("overwrite").partitionBy("pred").parquet(dir)
-        predDirsWritten.add(dir)
-        // partition values round-trip URL-escaped directory names; the
-        // select restores the (subj, pred, obj) column order the leaf
-        // layout exposes. EdgeLayoutSpec asserts frame equality.
-        spark.read.parquet(dir).select(col("subj"), col("pred"), col("obj"))
-      } else graft.plans.Caches.leaf(base)
+      fs.mkdirs(dir) // deleteOnExit registers only an existing path
+      fs.deleteOnExit(dir)
+      base.write.mode("overwrite").partitionBy("pred").parquet(dir.toString)
+      // partition values round-trip URL-escaped directory names; the select
+      // restores the (subj, pred, obj) column order. EdgeLayoutSpec asserts
+      // frame equality with the direct projection.
+      spark.read.parquet(dir.toString).select(col("subj"), col("pred"), col("obj"))
+    } { _ =>
+      fs.delete(dir, true)
+      fs.cancelDeleteOnExit(dir)
     }
+  }
 
   /** Flagship: full pipeline at tiny scale — returns the triple DataFrame. */
   def entry(spark: SparkSession, sfDir: String): DataFrame =
@@ -434,10 +379,10 @@ object KgPipeline {
   // articleExtractor.py:50-63). One day-side parse pass + one broadcast-
   // joined article pass, rolled up per month.
   def kg12MonthlyMetrics(s: SparkSession, d: String): DataFrame =
-    metricsCache.get(s, d) {
+    Leaves.frame("kg-metrics", s, d) {
       val (raw, perDay) = kg12MonthlyMetricsUncached(s, d)
       // eager leaf materialization; kg13's window reads blocks, not a re-run
-      try graft.plans.Caches.leaf(raw)
+      try Caches.leaf(raw)
       finally perDay.unpersist(blocking = false)
     }
 
@@ -622,7 +567,7 @@ object KgPipeline {
     * kg_cooc oracle dump share ONE association-chain build + self-join.
     */
   def cooccurrence(s: SparkSession, d: String): DataFrame =
-    coocCache.get(s, d) {
+    Leaves.frame("kg-cooc", s, d) {
       // Shape kept AS-IS after measurement (r6, BenchExtra `cooc` probe): a
       // window-based k-guard (count OVER (PARTITION BY event), no barrier,
       // self-join sides sharing one ReusedExchange) measured 5.3 s vs 1.5 s
@@ -636,7 +581,7 @@ object KgPipeline {
         eventWd.groupBy(col("event")).agg(count(lit(1)).as("k"))
           .filter(col("k") <= Kg15MaxEntities).select(col("event")),
         Seq("event"), "left_semi")
-      graft.plans.Caches.leaf(
+      Caches.leaf(
         ok.as("x").join(ok.as("y"),
             col("x.event") === col("y.event") && col("x.wd") < col("y.wd"))
           .select(col("x.wd").as("wd_a"), col("y.wd").as("wd_b"))

@@ -24,7 +24,6 @@ object QueryTimer {
     spark.sparkContext.setLogLevel("ERROR")
     if (args.headOption.contains("probeD02")) { probeD02(spark, sfDir); spark.stop(); return }
     if (args.headOption.contains("probeD06")) { probeD06(spark, sfDir); spark.stop(); return }
-    if (args.headOption.contains("probeEdgeLayout")) { probeEdgeLayout(spark, sfDir); spark.stop(); return }
     KgPipeline.triples(spark, sfDir).count()
     KgPipeline.edges(spark, sfDir).count()
     if (args.headOption.contains("probe")) { probe(spark, sfDir); spark.stop(); return }
@@ -127,30 +126,6 @@ object QueryTimer {
     }
     t("d06 full cold")(graft.queries.Dedup.queries("d06_embedding_neardup")(spark, d).count())
     t("d06 full warm")(graft.queries.Dedup.queries("d06_embedding_neardup")(spark, d).count())
-  }
-
-  /** A/B of the edge-cache layouts (leaf localCheckpoint vs pred-partitioned
-    * parquet) over the chain-heavy kg queries. Two newSession()s give each
-    * layout its own SessionCache entries; queries run twice warm so the
-    * numbers isolate plan+scan cost from the one-time cache build (timed
-    * separately). Back-to-back on one host, so throttle hits both sides.
-    */
-  def probeEdgeLayout(spark: SparkSession, d: String): Unit = {
-    val qs = Seq("kg02_events_per_year", "kg03_topics_per_year",
-      "kg04_closure_events_per_month", "kg05_event_map_wkts",
-      "kg06_topic_graph", "kg07_event_types", "kg08_canonical_clusters",
-      "kg11_company_entities", "kg15_entity_cooccurrence")
-    for (layout <- Seq("leaf", "pred"); rep <- 1 to 2) {
-      val s = spark.newSession()
-      s.conf.set("graft.edges.layout", layout)
-      t(s"[$layout rep$rep] triples build")(KgPipeline.triples(s, d).count())
-      t(s"[$layout rep$rep] edges build")(KgPipeline.edges(s, d).count())
-      for (n <- qs; fn <- SparkEntry.queries.get(n); r <- 1 to 2)
-        t(s"[$layout rep$rep] $n run$r")(fn(s, d).count())
-    }
-    // free the per-session caches AND their pred-layout parquet dirs — each
-    // probe run used to strand two dirs in /tmp (r6 ADVICE)
-    KgPipeline.release()
   }
 
   /** Sub-step timings for the iterative kg queries. */

@@ -57,7 +57,7 @@ object ScalingBench {
       articles = envInt("SPARK_GRAFT_BENCH_ARTICLES", 2000))
     // corpus-table writes + JIT/codegen warmup all before any timing
     sizes.foreach(y => graft.kg.CorpusStore.ensure(spark, paramsFor(y)))
-    Pipeline.triplesFor(spark, paramsFor(sizes.min)).count()
+    timedTriples(spark, paramsFor(sizes.min))
 
     // measure every size in this one warm JVM, min-of-k (host burst-budget
     // noise swamps single measurements); the barrier aligns all parties per
@@ -66,7 +66,6 @@ object ScalingBench {
     val points = sizes.map { y =>
       val p = paramsFor(y)
       val runs = (1 to repeats).map { r =>
-        spark.catalog.clearCache()
         System.gc()
         // idle so the host's burstable-CPU budget recovers before measuring —
         // a 4-JVM fleet drains it ~4x faster than one pinned JVM
@@ -78,9 +77,7 @@ object ScalingBench {
           while (Files.list(d).iterator().asScalaCount(f =>
             f.getFileName.toString.endsWith(s"-$y-$r")) < parties) Thread.sleep(200)
         }
-        val t0 = System.nanoTime()
-        val n = Pipeline.triplesFor(spark, p).count()
-        (n, (System.nanoTime() - t0) / 1e9)
+        timedTriples(spark, p)
       }
       (Synth.allDaysOf(p).size, runs.map(_._2).min, runs.head._1)
     }
@@ -89,6 +86,16 @@ object ScalingBench {
     }.mkString("[", ",", "]")
     println(s"""{"metric":"kg_scaling_shard","year":$year,"cores":$cores,"points":$pts}""")
     spark.stop()
+  }
+
+  /** One full triple build: (triple count, seconds). Its stage caches are
+    * released after the clock stops, so cached blocks from run k do not
+    * thrash run k+1.
+    */
+  private def timedTriples(spark: SparkSession, p: Synth.Params): (Long, Double) = {
+    val t0 = System.nanoTime()
+    val b = Pipeline.trackedBuild(spark, p)
+    try (b.triples.count(), (System.nanoTime() - t0) / 1e9) finally b.releaseCaches()
   }
 
   implicit private class IterCount[A](it: java.util.Iterator[A]) {
@@ -131,18 +138,15 @@ object ScalingBench {
     // JIT/codegen warmup (same plan shapes) + corpus-table writes happen
     // before any timing
     sizes.foreach(sp => graft.kg.CorpusStore.ensure(spark, sp))
-    Pipeline.triplesFor(spark, base.copy(years = 1,
-      articles = math.min(base.articles, 4000), density = 1)).count()
+    timedTriples(spark, base.copy(years = 1,
+      articles = math.min(base.articles, 4000), density = 1))
 
     def once(sp: Synth.Params): (Long, Double) = {
-      spark.catalog.clearCache()
       System.gc()
       // settle gap before measuring (taskset pinning keeps host load at
       // cores/32, so the burst budget barely drains — a short gap suffices)
       Thread.sleep(envInt("SPARK_GRAFT_BENCH_SLEEP_MS", 5000).toLong)
-      val t0 = System.nanoTime()
-      val n = Pipeline.triplesFor(spark, sp).count()
-      (n, (System.nanoTime() - t0) / 1e9)
+      timedTriples(spark, sp)
     }
     val points = sizes.map { sp =>
       val runs = (1 to 2).map(_ => once(sp))
@@ -163,19 +167,14 @@ object ScalingBench {
     val docs = Synth.allDaysOf(p).size.toLong + p.articles
 
     def once(): (Long, Double) = {
-      // drop the previous run's persisted blocks — cached GBs from run k
-      // thrash run k+1's storage memory otherwise
-      spark.catalog.clearCache()
       System.gc()
       // idle gap so the host's burstable-CPU budget recovers before measuring
       Thread.sleep(30000)
-      val t0 = System.nanoTime()
-      val n = Pipeline.triplesFor(spark, p).count()
-      (n, (System.nanoTime() - t0) / 1e9)
+      timedTriples(spark, p)
     }
     // JIT/codegen warmup at reduced scale (same plan shapes)
-    Pipeline.triplesFor(spark, p.copy(years = 1, articles = math.min(p.articles, 4000),
-      density = 1)).count()
+    timedTriples(spark, p.copy(years = 1, articles = math.min(p.articles, 4000),
+      density = 1))
     val runs = (1 to 3).map(_ => once())
     require(runs.map(_._1).distinct.size == 1, s"nondeterministic triples: $runs")
     val secs = runs.map(_._2).min

@@ -73,15 +73,6 @@ object Pipeline {
       }
   }
 
-  /** Untracked convenience wrapper (tests): DISCARDS the stage-cache
-    * handles, so the parse-stage persist can never be released and — worse —
-    * Spark's CacheManager may silently serve the leaked cache to any later
-    * plan with the same subtree. Long-lived callers must use
-    * [[enrichedArticlesTracked]] and release after materializing.
-    */
-  def enrichedArticles(spark: SparkSession, p: Synth.Params): Dataset[EnrichedArticle] =
-    enrichedArticlesTracked(spark, p)._1
-
   /** Enriched articles plus the parse-stage cache the join graph holds
     * (released by the caller once the result is materialized).
     */
@@ -112,18 +103,10 @@ object Pipeline {
       }
   }
 
-  def triples(spark: SparkSession, sfDir: String,
-      onlyDates: Option[Set[String]] = None): Dataset[Triple] =
-    triplesFor(spark, Synth.paramsFor(sfDir), onlyDates)
-
-  def triplesFor(spark: SparkSession, p: Synth.Params,
-      onlyDates: Option[Set[String]] = None): Dataset[Triple] =
-    triplesTracked(spark, p, onlyDates)._1
-
   /** Build + persist + materialize the triple table, then release the
-    * intermediate stage caches (articles / doc-join / mentions) the build
-    * holds — long-lived consumers (KgPipeline's query cache, benches) keep
-    * only the one result cache instead of leaking four.
+    * intermediate stage caches (days / articles / mentions / enrich) the
+    * build holds — callers keep only the one result leaf (free it with
+    * [[graft.plans.Caches.free]]) instead of leaking four.
     */
   def materializedTriples(spark: SparkSession, sfDir: String,
       onlyDates: Option[Set[String]] = None): Dataset[Triple] = {
@@ -134,9 +117,6 @@ object Pipeline {
     // this frame, and with the un-truncated lineage every Dataset
     // transformation re-analyzes all of them — measured ~7 s of ANALYSIS per
     // chain query at sf0.1, dwarfing planning (0.5 s) and execution (2 s).
-    // Blocks are released when the frame becomes unreachable after
-    // KgPipeline.release() drops the reference (ContextCleaner), or at JVM
-    // exit.
     // finally: a failed checkpoint job must still release the stage caches
     // (same failure-path hygiene as the other cache builders)
     // (graft.plans.Caches: reliable checkpoint under graft.cache.reliable)
@@ -151,12 +131,6 @@ object Pipeline {
   case class Build(triples: Dataset[Triple], caches: Seq[Dataset[_]],
       articleErrorsByDate: DataFrame) {
     def releaseCaches(): Unit = caches.foreach(_.unpersist(blocking = false))
-  }
-
-  def triplesTracked(spark: SparkSession, p: Synth.Params,
-      onlyDates: Option[Set[String]] = None): (Dataset[Triple], Seq[Dataset[_]]) = {
-    val b = trackedBuild(spark, p, onlyDates)
-    (b.triples, b.caches)
   }
 
   def trackedBuild(spark: SparkSession, p: Synth.Params,

@@ -2,10 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.Dataset
 
-/** Shared-cache materialization policy.
+/** Shared-cache materialization policy ([[Leaves]] holds and frees the
+  * shared frames built with it).
   *
-  * Long-lived shared caches (the triple table, the edge projection, the
-  * enriched-article frame) must be LEAF plans: consumers embed up to ~8
+  * Long-lived shared caches (the triple table, the enriched-article frame,
+  * the dedup pair tables) must be LEAF plans: consumers embed up to ~8
   * copies, and an un-truncated lineage costs O(copies × plan size) of eager
   * re-analysis per query (see the spark-bench-protocol notes / BENCH/
   * BASELINE.md). Two ways to get a leaf:
@@ -42,7 +43,10 @@ object Caches {
     * them under spark.cleaner.referenceTracking.cleanCheckpoints (default
     * false) and never at context stop, so without this each rebuild cycle
     * would grow the checkpoint store by a full copy of the cached frame.
-    * Call only after every consumer of the frame has finished.
+    * File relations the frame reads are never touched: a leaf that owns
+    * files (the edge cache) deletes them in its own free hook
+    * ([[Leaves.leaf]]). Call only after every consumer of the frame has
+    * finished.
     */
   def free(ds: Dataset[_]): Unit = {
     ds.unpersist(blocking = false) // covers any persist-backed value
@@ -55,20 +59,6 @@ object Caches {
             val path = new org.apache.hadoop.fs.Path(p)
             path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
           } catch { case scala.util.control.NonFatal(_) => () }
-        }
-      // the pred-partitioned edge cache (KgPipeline.edges layout=pred) is a
-      // session-private parquet directory this module wrote — delete it,
-      // nothing else ever reads it. Foreign file relations are untouched.
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths
-              .filter(_.toString.contains("graft-edge-cache"))
-              .foreach { path =>
-                try path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
-                catch { case scala.util.control.NonFatal(_) => () }
-              }
-          case _ => ()
         }
       case _ => ()
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import graft.plans.Leaves
 
 /** Deduplication operators for a training-data pipeline over `documents`:
   * exact/bag-of-words dedup, MinHash signatures, MinHash-LSH candidate pairs
@@ -86,24 +87,16 @@ object Dedup {
     * signatures. The per-character md5 MinHash scan is the expensive subtree
     * of both d02 and d05, and each query references it 2-3× — without
     * materialization Catalyst recomputes it per reference (~6-8× total, the
-    * round-2 regression). Cached per sf dir so d02 and d05 share ONE compute;
-    * released by [[release]] (Bench/Verify call it) so no blocks linger.
+    * round-2 regression). A [[graft.plans.Leaves]] entry per sf dir so d02
+    * and d05 share ONE compute; its free hook unpersists `sigs` and `groups`.
     * At 100 TB the same persist(MEMORY_AND_DISK) holds: signatures are a
     * narrow (doc_id, band, sig) projection, a tiny fraction of corpus bytes.
     */
   private[graft] case class Prologue(groups: DataFrame,
       groupPairs: DataFrame, sigs: DataFrame)
 
-  // plans.SessionCache: session-reference keys, single-build computeIfAbsent
-  // (a TrieMap.getOrElseUpdate could run the builder twice under concurrent
-  // first calls and leak the losing builder's persisted blocks), and a
-  // reentrancy-safe dead-session purge — one shared lifecycle implementation
-  // with KgPipeline's four caches.
-  private val prologueCache =
-    new graft.plans.SessionCache[Prologue]("dedup-lsh-prologue")
-
   private[graft] def prologue(s: SparkSession, d: String): Prologue =
-    prologueCache.get(s, d) {
+    Leaves.leaf("dedup-lsh-prologue", s, d) {
       val docs = Tables.documents(s, d)
         .filter(size(split(col("text"), " ")) >= 3)
       val groups = docs.selectExpr("doc_id", s"$bowFp AS fp")
@@ -126,6 +119,9 @@ object Dedup {
         groups.unpersist(blocking = false); throw t
       }
       Prologue(groups, groupPairs, sigs)
+    } { p =>
+      p.sigs.unpersist(blocking = false)
+      p.groups.unpersist(blocking = false)
     }
 
   /** Mega-bucket guard threshold (a bucket holding more members than this is
@@ -136,28 +132,14 @@ object Dedup {
     */
   private[queries] val BucketGuard = 50
 
-  // the rep-level banded candidate self-join, materialized once per
-  // (session, sf): d02 and d09 consume the identical candidate population
-  // (that is d09's calibration contract), and before r6 each re-executed the
-  // bucket-bound + self-join chain inside its own plan
-  private val bandPairsCache =
-    new graft.plans.SessionCache[DataFrame]("dedup-band-pairs")
-
   /** [[boundedBandPairs]] over the shared prologue, distinct, as a
-    * materialized leaf — the one candidate population d02 and d09 share.
+    * materialized leaf per (session, sf) — the one candidate population d02
+    * and d09 share (that is d09's calibration contract).
     */
   private[graft] def bandPairsLeaf(s: SparkSession, d: String): DataFrame =
-    bandPairsCache.get(s, d) {
+    Leaves.frame("dedup-band-pairs", s, d) {
       boundedBandPairs(prologue(s, d).sigs).distinct().localCheckpoint(true)
     }
-
-  // d02's VERIFIED top-100 pair table, materialized once per (session, sf):
-  // the shingle-verification joins are the expensive half of d02, and d11
-  // (cluster resolution over exactly these pairs) previously re-executed
-  // them inside its own plan — the whole candidate+verify chain ran twice
-  // per lap and would run twice at 100 TB too (r5 verdict item 1)
-  private val verifiedPairsCache =
-    new graft.plans.SessionCache[DataFrame]("dedup-d02-pairs")
 
   /** Rep-level LSH candidate pairs (a < b) from the guard-bounded banding —
     * the single definition of "d02's candidate population", shared with d09.
@@ -197,24 +179,18 @@ object Dedup {
         "CAST(size(array_intersect(ga, gb)) AS BIGINT) AS n_common",
         "CAST(size(ga) AS BIGINT) AS na", "CAST(size(gb) AS BIGINT) AS nb")
 
-  /** Drop the cached LSH prologue blocks (bench/verify hygiene). */
-  def release(): Unit = {
-    prologueCache.foreachValue { p =>
-      p.sigs.unpersist(blocking = false)
-      p.groups.unpersist(blocking = false)
-    }
-    prologueCache.clear()
-    bandPairsCache.foreachValue(graft.plans.Caches.free(_))
-    bandPairsCache.clear()
-    verifiedPairsCache.foreachValue(graft.plans.Caches.free(_))
-    verifiedPairsCache.clear()
-  }
+  /** Free every shared leaf of every module (bench/verify hygiene): an alias
+    * of [[graft.plans.Leaves.releaseAll]], kept for the driver mains.
+    */
+  def release(): Unit = Leaves.releaseAll()
 
-  /** d02's result rows (top-100 verified pairs), materialized as a leaf —
-    * consumed by d02 (ordered readout) and d11 (cluster resolution).
+  /** d02's result rows (top-100 verified pairs), materialized as a leaf per
+    * (session, sf) — consumed by d02 (ordered readout) and d11 (cluster
+    * resolution). The shingle-verification joins are the expensive half of
+    * d02; built once, the candidate+verify chain runs once per lap.
     */
   private[graft] def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    verifiedPairsCache.get(s, d) {
+    Leaves.frame("dedup-d02-pairs", s, d) {
       val docs = Tables.documents(s, d)
         .filter(size(split(col("text"), " ")) >= 3)
       val pro = prologue(s, d)

@@ -35,23 +35,11 @@ object Similarity {
       "CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
   private val cnormExpr = qnormExpr.replace("qe", "ce")
 
-  // s01/s02 top-k result tables, materialized once per (session, sf) — s05
-  // (recall calibration over exactly these row sets) previously re-executed
-  // both scans + top-k windows inside its own plan (the d11 lesson applied
-  // to the similarity family, r6). Results are NQueries×K rows.
-  private val s01Cache = new graft.plans.SessionCache[DataFrame]("sim-s01")
-  private val s02Cache = new graft.plans.SessionCache[DataFrame]("sim-s02")
-
-  /** Free the cached s01/s02 result leaves (bench/verify hygiene — invoked
-    * via KgPipeline.release, the hook the frozen driver mains call).
-    */
-  def release(): Unit = {
-    s01Cache.foreachValue(graft.plans.Caches.free(_)); s01Cache.clear()
-    s02Cache.foreachValue(graft.plans.Caches.free(_)); s02Cache.clear()
-  }
-
+  // s01/s02 top-k result tables are leaves per (session, sf): s05 (recall
+  // calibration over exactly these row sets) reads them instead of
+  // re-executing both scans + top-k windows. Results are NQueries×K rows.
   private def s01Cached(s: SparkSession, d: String): DataFrame =
-    s01Cache.get(s, d) {
+    graft.plans.Leaves.frame("sim-s01", s, d) {
       val emb = Tables.embeddings(s, d)
       val queries = emb.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -119,7 +107,7 @@ object Similarity {
   }
 
   private def s02Cached(s: SparkSession, d: String): DataFrame =
-    s02Cache.get(s, d) {
+    graft.plans.Leaves.frame("sim-s02", s, d) {
       val emb = Tables.embeddings(s, d)
       val bk = buckets(s, d)
       val vecs = emb.join(bk, Seq("vec_id"))

@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The edge cache has two physical layouts (`graft.edges.layout`): the
-  * localCheckpoint leaf and the pred-partitioned parquet store. Queries must
-  * be layout-blind — same rows, same chain-query results — and the parquet
-  * layout must actually PRUNE: a single-predicate filter's scan reads only
-  * that predicate's partition. The J1 both-paths pattern (Enrich broadcast vs
-  * forced-shuffle).
+/** The edge cache is a pred-partitioned parquet store private to its leaf.
+  * It must hold exactly the distinct (subj, pred, obj) projection of the
+  * triple table over the retained predicates, its directory must go with
+  * the leaf, and a single-predicate filter's scan must read only that
+  * predicate's partition.
   */
 class EdgeLayoutSpec extends AnyFunSuite {
 
@@ -21,57 +21,43 @@ class EdgeLayoutSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def session(layout: String): SparkSession = {
-    val s = spark.newSession() // own SessionCache key → own edge build
-    s.conf.set("graft.edges.layout", layout)
-    s
-  }
-
-  test("pred-partitioned layout returns the exact leaf-layout edge set") {
-    val leaf = KgPipeline.edges(session("leaf"), sfDir)
-    val pred = KgPipeline.edges(session("pred"), sfDir)
-    assert(leaf.columns.toSeq == pred.columns.toSeq)
-    val l = leaf.collect().map(_.toSeq).sortBy(_.mkString("\u0000"))
-    val p = pred.collect().map(_.toSeq).sortBy(_.mkString("\u0000"))
-    assert(l.length == p.length, s"row counts differ: ${l.length} vs ${p.length}")
+  test("edge cache equals the direct distinct projection of triples over its predicates") {
+    val s = spark.newSession() // own leaf key → own edge build
+    val edges = KgPipeline.edges(s, sfDir)
+    val direct = KgPipeline.triples(s, sfDir)
+      .filter(col("pred").isin(KgPipeline.EdgePreds: _*))
+      .select(col("subj"), col("pred"), col("obj")).distinct()
+    assert(edges.columns.toSeq == direct.columns.toSeq)
+    val e = edges.collect().map(_.toSeq).sortBy(_.mkString("\u0000"))
+    val d = direct.collect().map(_.toSeq).sortBy(_.mkString("\u0000"))
+    assert(e.length == d.length, s"row counts differ: ${e.length} vs ${d.length}")
     // URI predicates round-trip through URL-escaped partition directory
     // names — any escaping defect shows up here as a value diff
-    assert(l.sameElements(p))
-  }
-
-  test("chain queries are layout-blind (kg05/kg06/kg11 identical rows)") {
-    val sLeaf = session("leaf")
-    val sPred = session("pred")
-    for (q <- Seq("kg05_event_map_wkts", "kg06_topic_graph", "kg11_company_entities")) {
-      val fn = SparkEntry.queries(q)
-      val a = fn(sLeaf, sfDir).collect().map(_.toSeq)
-      val b = fn(sPred, sfDir).collect().map(_.toSeq)
-      assert(a.length == b.length, s"$q row counts differ")
-      assert(a.sameElements(b), s"$q rows differ between layouts")
-    }
+    assert(e.sameElements(d))
   }
 
   test("release() deletes the pred layout's session-private parquet dir") {
-    val s = session("pred")
+    val s = spark.newSession()
+    val root = java.nio.file.Files.createTempDirectory("graft_pred_dir").toFile
+    s.conf.set("graft.edges.predDir", root.getPath)
     val e = KgPipeline.edges(s, sfDir)
     val dirs = e.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         r.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.rootPaths.map(_.toString)
-    }.flatten.filter(_.contains("graft-edge-cache"))
-    assert(dirs.nonEmpty, "pred layout must read from the edge-cache dir")
-    val local = new java.io.File(new java.net.URI(dirs.head).getPath)
-    assert(local.exists())
+          .location.rootPaths.map(p => new java.io.File(p.toUri.getPath))
+    }.flatten
+    assert(dirs.size == 1 && dirs.head.getParentFile == root,
+      s"edges must read one dir under the custom graft.edges.predDir: $dirs")
+    assert(dirs.head.exists())
     KgPipeline.release()
-    assert(!local.exists(),
-      s"release() must delete the pred-layout cache dir $local — " +
+    assert(!dirs.head.exists(),
+      s"release() must delete the edge-cache dir ${dirs.head} — " +
         "repeated build cycles would otherwise grow the store")
+    root.delete()
   }
 
   test("single-predicate filter prunes partitions in the pred layout") {
-    import org.apache.spark.sql.functions.col
-    val s = session("pred")
-    val e = KgPipeline.edges(s, sfDir)
+    val e = KgPipeline.edges(spark.newSession(), sfDir)
     val one = e.filter(col("pred") === graft.kg.Ns.owlSameAs)
     val scans = one.queryExecution.executedPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f

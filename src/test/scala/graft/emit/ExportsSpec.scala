@@ -118,7 +118,7 @@ class ExportsSpec extends AnyFunSuite {
     Materialize.run(spark, "/root/testdata/sf0.001", table, maxMonths = 2)
     val out = Files.createTempDirectory("graft_compact_out").toString
     val n = Exports.compact(spark, table, out)
-    val direct = Pipeline.triples(spark, "/root/testdata/sf0.001")
+    val direct = Pipeline.materializedTriples(spark, "/root/testdata/sf0.001")
       .drop("event_date").dropDuplicates().count()
     assert(n == direct)
   }

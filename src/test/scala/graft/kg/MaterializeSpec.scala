@@ -29,7 +29,7 @@ class MaterializeSpec extends AnyFunSuite {
     // final snapshot equals a from-scratch full run
     val got = TableIO.read(spark, table, "event_date")
       .collect().map(_.toString).toSet
-    val full = Pipeline.triples(spark, sfDir).collect().map(_.toString).toSet
+    val full = Pipeline.materializedTriples(spark, sfDir).collect().map(_.toString).toSet
     // read() returns event_date as a partition column possibly reordered;
     // compare as Triple-shaped sets
     val gotSet = TableIO.read(spark, table, "event_date")
@@ -37,7 +37,7 @@ class MaterializeSpec extends AnyFunSuite {
         "obj_dtype", "obj_lang", "CAST(event_date AS STRING) AS event_date")
       .as[Triple](spark.implicits.newProductEncoder[Triple])
       .collect().toSet
-    val fullSet = Pipeline.triples(spark, sfDir).collect().toSet
+    val fullSet = Pipeline.materializedTriples(spark, sfDir).collect().toSet
     assert(gotSet == fullSet)
   }
 
@@ -56,7 +56,7 @@ class MaterializeSpec extends AnyFunSuite {
     assert(metrics.contains("month_task_ms") && metrics.contains("avg_day_task_ms"))
     // counters survive the manifest round-trip and a snapshot bump
     val someDate = "2022-01-06"
-    val t = Pipeline.triples(spark, sfDir, Some(Set(someDate)))
+    val t = Pipeline.materializedTriples(spark, sfDir, Some(Set(someDate)))
     TableIO.replacePartitions(spark, table, t.toDF(), "event_date", Seq(someDate))
     assert(TableIO.currentManifest(table).partitions("2022-01-05").metrics == metrics)
   }
@@ -110,7 +110,7 @@ class MaterializeSpec extends AnyFunSuite {
     spark.conf.set("graft.write.tasksPerPartition", "4")
     try {
       val someDate = "2022-01-05"
-      val t = Pipeline.triples(spark, sfDir, Some(Set(someDate)))
+      val t = Pipeline.materializedTriples(spark, sfDir, Some(Set(someDate)))
       val m = TableIO.replacePartitions(spark, table, t.toDF(), "event_date", Seq(someDate))
       val meta = m.partitions(someDate)
       val dir = java.nio.file.Paths.get(table, "data", s"event_date=$someDate")
@@ -131,7 +131,7 @@ class MaterializeSpec extends AnyFunSuite {
     Materialize.run(spark, sfDir, table, maxMonths = 1)
     val before = TableIO.currentManifest(table)
     val someDate = "2022-01-05"
-    val t = Pipeline.triples(spark, sfDir, Some(Set(someDate)))
+    val t = Pipeline.materializedTriples(spark, sfDir, Some(Set(someDate)))
     TableIO.replacePartitions(spark, table, t.toDF(), "event_date", Seq(someDate))
     val after = TableIO.currentManifest(table)
     assert(after.snapshotId == before.snapshotId + 1)

@@ -15,7 +15,7 @@ class PipelineSpec extends AnyFunSuite {
   test("pipeline triples match the sequential oracle at P/R >= 0.95 (exact)") {
     val sfDir = "/root/testdata/sf0.001" // params: 2 months, 240 articles
     val p = Synth.paramsFor(sfDir)
-    val got = Pipeline.triples(spark, sfDir).collect().toSet
+    val got = Pipeline.materializedTriples(spark, sfDir).collect().toSet
     val expected = SequentialOracle.expectedTriples(p)
     val tp = (got & expected).size.toDouble
     val precision = if (got.nonEmpty) tp / got.size else 0.0
@@ -35,8 +35,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("triple set is deterministic under different parallelism") {
     val sfDir = "/root/testdata/sf0.001"
-    val a = Pipeline.triples(spark, sfDir).collect().toSet
-    val b = Pipeline.triples(spark, sfDir).repartition(3).collect().toSet
+    val a = Pipeline.materializedTriples(spark, sfDir).collect().toSet
+    val b = Pipeline.materializedTriples(spark, sfDir).repartition(3).collect().toSet
     assert(a == b)
   }
 
@@ -71,8 +71,9 @@ class PipelineSpec extends AnyFunSuite {
 
   test("dictionary enrichment runs as Catalyst broadcast hash joins") {
     val p = Synth.paramsFor("/root/testdata/sf0.001")
-    val plan = Pipeline.enrichedArticles(spark, p)
-      .queryExecution.executedPlan.toString
+    val (e, caches) = Pipeline.enrichedArticlesTracked(spark, p)
+    val plan = try e.queryExecution.executedPlan.toString
+      finally caches.foreach(_.unpersist(blocking = false))
     assert(plan.contains("BroadcastHashJoin"),
       s"expected BroadcastHashJoin in enrich plan:\n${plan.take(4000)}")
   }
@@ -80,7 +81,7 @@ class PipelineSpec extends AnyFunSuite {
   test("oversize-dictionary shuffle join path emits the same triple set") {
     val sfDir = "/root/testdata/sf0.001"
     val p = Synth.paramsFor(sfDir)
-    val broadcastPath = Pipeline.triples(spark, sfDir).collect().toSet
+    val broadcastPath = Pipeline.materializedTriples(spark, sfDir).collect().toSet
     spark.conf.set("graft.dicts.broadcast.maxArticles", "0") // dicts "oversize"
     // pin the static planner so neither the auto-broadcast threshold nor AQE
     // re-introduces a broadcast behind the gate's back for the plan assert
@@ -88,11 +89,12 @@ class PipelineSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       // the gate really removed the hints: no broadcast join over the dicts
-      val plan = Pipeline.enrichedArticles(spark, p)
-        .queryExecution.executedPlan.toString
+      val (e, caches) = Pipeline.enrichedArticlesTracked(spark, p)
+      val plan = try e.queryExecution.executedPlan.toString
+        finally caches.foreach(_.unpersist(blocking = false))
       assert(!plan.contains("BroadcastHashJoin"),
         s"dict broadcast hint not gated off:\n${plan.take(4000)}")
-      val shufflePath = Pipeline.triples(spark, sfDir).collect().toSet
+      val shufflePath = Pipeline.materializedTriples(spark, sfDir).collect().toSet
       assert(shufflePath == broadcastPath)
     } finally {
       spark.conf.unset("graft.dicts.broadcast.maxArticles")
@@ -103,11 +105,11 @@ class PipelineSpec extends AnyFunSuite {
 
   test("salted one-hop shuffle join path emits the same triple set") {
     val sfDir = "/root/testdata/sf0.001"
-    val broadcastPath = Pipeline.triples(spark, sfDir).collect().toSet
+    val broadcastPath = Pipeline.materializedTriples(spark, sfDir).collect().toSet
     spark.conf.set("graft.onehop.broadcast.maxArticles", "0") // force salt path
     spark.conf.set("graft.onehop.salt.hotThreshold", "3") // engage hot keys
     try {
-      val saltedPath = Pipeline.triples(spark, sfDir).collect().toSet
+      val saltedPath = Pipeline.materializedTriples(spark, sfDir).collect().toSet
       assert(saltedPath == broadcastPath)
     } finally {
       spark.conf.unset("graft.onehop.broadcast.maxArticles")
@@ -155,7 +157,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("all four graph modules are populated, osm > base per-article shape") {
     val sfDir = "/root/testdata/sf0.001"
-    val counts = Pipeline.triples(spark, sfDir)
+    val counts = Pipeline.materializedTriples(spark, sfDir)
       .groupBy("graph_module").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(Set("base", "raw", "osm", "ohg").subsetOf(counts.keySet))

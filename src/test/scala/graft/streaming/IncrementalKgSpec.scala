@@ -36,7 +36,7 @@ class IncrementalKgSpec extends AnyFunSuite {
         "obj_dtype", "obj_lang", "CAST(event_date AS STRING) AS event_date")
       .as[Triple](spark.implicits.newProductEncoder[Triple])
       .collect().toSet
-    val batchSet = Pipeline.triples(spark, sfDir).collect().toSet
+    val batchSet = Pipeline.materializedTriples(spark, sfDir).collect().toSet
     assert(gotSet == batchSet)
   }
 }
