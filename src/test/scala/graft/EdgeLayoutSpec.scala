@@ -21,7 +21,9 @@ class EdgeLayoutSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  test("edge cache equals the direct distinct projection of triples over its predicates") {
+  // The removed leaf layout held exactly the direct distinct projection of
+  // the triples over EdgePreds, so that projection is the reference set.
+  test("pred-partitioned layout returns the exact leaf-layout edge set") {
     val s = spark.newSession() // own leaf key → own edge build
     val edges = KgPipeline.edges(s, sfDir)
     val direct = KgPipeline.triples(s, sfDir)
